@@ -23,10 +23,13 @@ probe totals reflect production plans.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_pipeline_4_online_retail_spark.session import release_scoped
 
 
 @dataclass
@@ -56,8 +59,19 @@ def register(
     return wrap
 
 
+def _scoped(fn: Callable[[SparkSession, str], DataFrame]) -> Callable:
+    @functools.wraps(fn)
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_scoped()
+        return fn(spark, sf_dir)
+
+    return build
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: q.build for name, q in REGISTRY.items()}
+    """Every registered builder, each releasing the previous query's
+    scoped caches (:func:`session.persist_scoped`) before it builds."""
+    return {name: _scoped(q.build) for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:

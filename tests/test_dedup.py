@@ -147,8 +147,8 @@ def test_connected_components_matches_union_find(spark):
 
     from data_pipeline_4_online_retail_spark.operators.dedup import (
         connected_components,
-        release_caches,
     )
+    from data_pipeline_4_online_retail_spark.session import release_scoped
 
     @settings(max_examples=4, deadline=None, derandomize=True)
     @given(
@@ -162,7 +162,7 @@ def test_connected_components_matches_union_find(spark):
         )
     )
     def check(edges):
-        release_caches()
+        release_scoped()
         parent: dict = {}
 
         def find(x):
@@ -191,7 +191,7 @@ def test_connected_components_matches_union_find(spark):
         assert got == expected
 
     check()
-    release_caches()
+    release_scoped()
 
 
 def test_connected_components_deep_path(spark):
@@ -205,8 +205,8 @@ def test_connected_components_deep_path(spark):
     regardless of round count."""
     from data_pipeline_4_online_retail_spark.operators.dedup import (
         connected_components,
-        release_caches,
     )
+    from data_pipeline_4_online_retail_spark.session import release_scoped
 
     n = 31
     # Shuffle ids so the min is mid-path (propagation must cross both arms).
@@ -216,7 +216,7 @@ def test_connected_components_deep_path(spark):
     )
     got = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
     assert got == {i: 0 for i in ids}
-    release_caches()
+    release_scoped()
 
 
 def test_semantic_dedup_udf_twin_exact(spark):

@@ -1,12 +1,10 @@
 """r11 guard-path pins (ADVICE r10): malformed-env fallback and the
-shared drain helper. No SparkSession needed."""
+scoped-persist release. No SparkSession needed."""
 
 from __future__ import annotations
 
-from data_pipeline_4_online_retail_spark.session import (
-    drain_retained,
-    initial_partition_num,
-)
+from data_pipeline_4_online_retail_spark import session
+from data_pipeline_4_online_retail_spark.session import initial_partition_num
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -41,12 +39,13 @@ class _GoodHandle:
         self._log.append("ok")
 
 
-def test_drain_retained_survives_raising_handles():
+def test_release_scoped_survives_raising_handles(monkeypatch):
     """Every handle is popped and unpersist attempted even when earlier
-    handles raise (the stopped-context NPE class) — the list ends empty
-    and later handles still release."""
+    handles raise (the stopped-context NPE class) — the registry ends
+    empty and later handles still release."""
     calls: list[str] = []
     retained = [_GoodHandle(calls), _RaisingHandle(calls), _GoodHandle(calls)]
-    drain_retained(retained)
+    monkeypatch.setattr(session, "_SCOPED", retained)
+    session.release_scoped()
     assert retained == []
     assert sorted(calls) == ["ok", "ok", "raised"]

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pytest
 
-from data_pipeline_4_online_retail_spark.operators import multimodal as mm
+from data_pipeline_4_online_retail_spark import session
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -47,16 +47,16 @@ def test_phash_dedup_python_pass_materializes_once(spark, qs):
         live = plan.split("InMemoryRelation")[0]
         assert "MapInPandas" not in live, live
     finally:
-        mm.release_caches()
+        session.release_scoped()
 
 
 def test_phash_dedup_cache_released_on_reentry(spark, qs):
     qs["mm_phash_dedup"](spark, SF_DIR)
-    assert len(mm._RETAINED) == 1
+    assert len(session._SCOPED) == 1
     qs["mm_phash_dedup"](spark, SF_DIR)  # builder entry releases the last
-    assert len(mm._RETAINED) == 1
-    mm.release_caches()
-    assert not mm._RETAINED
+    assert len(session._SCOPED) == 1
+    session.release_scoped()
+    assert not session._SCOPED
 
 
 def test_dsir_stats_single_documents_scan(spark, qs):
