@@ -7,10 +7,19 @@ order with fail-stop quality gates between stages (C1-C3).
 
 ``run_retail_pipeline`` is the whole reference DAG end-to-end:
 load fixtures (or real CSV) → gate → dims+fact → gate → reports → gate.
+
+Each stage persists its tables (``session.persist_scoped``: raw_invoices
+and the 8 models — the reference's ``materialized: table``). Persist is
+lazy: a table is filled by the first job that reads it (a gate's
+aggregate), and every later gate, model and write reads the cached
+blocks instead of re-running the lineage from the raw input. The handles live
+in the scoped-persist registry, so a registry builder releases them; a
+released table recomputes through its lineage.
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -18,6 +27,7 @@ from pyspark.sql import SparkSession
 
 from data_pipeline_4_online_retail_spark import quality
 from data_pipeline_4_online_retail_spark.plans import retail
+from data_pipeline_4_online_retail_spark.session import persist_scoped
 from data_pipeline_4_online_retail_spark.sources.catalog import Catalog
 
 
@@ -37,22 +47,26 @@ class Pipeline:
         return self
 
     def execute(self, cat: Catalog) -> list[quality.QualityReport]:
-        """Run stages in order; a failing gate raises QualityGateError and
-        halts the chain (the reference's Soda fail-stop, C2)."""
+        """Run stages in order and return one run record per stage: its
+        gate's report (empty for a stage without a gate) stamped with the
+        stage name and wall seconds. A failing gate raises QualityGateError
+        carrying the records so far and halts the chain (the reference's
+        Soda fail-stop, C2)."""
         reports: list[quality.QualityReport] = []
         for stage in self.stages:
+            t0 = time.perf_counter()
             stage.run(cat)
-            if stage.gate is not None:
-                rep = stage.gate(cat)
-                reports.append(rep)
-                rep.raise_on_failure()
+            rep = stage.gate(cat) if stage.gate is not None else quality.QualityReport()
+            rep.stage, rep.seconds = stage.name, time.perf_counter() - t0
+            reports.append(rep)
+            rep.raise_on_failure(reports)
         return reports
 
 
 def _load_stage(raw_loader, country_loader):
     def run(cat: Catalog) -> None:
         spark = cat.spark
-        cat.register("raw_invoices", retail.preprocess(raw_loader(spark)))
+        cat.register("raw_invoices", persist_scoped(retail.preprocess(raw_loader(spark))))
         cat.register("country", country_loader(spark))
 
     return run
@@ -61,7 +75,7 @@ def _load_stage(raw_loader, country_loader):
 def _transform_stage(cat_unused=None):
     def run(cat: Catalog) -> None:
         for name, model in retail.MODELS[:5]:  # dims + fact
-            cat.register(name, model(cat))
+            cat.register(name, persist_scoped(model(cat)))
 
     return run
 
@@ -69,7 +83,7 @@ def _transform_stage(cat_unused=None):
 def _report_stage():
     def run(cat: Catalog) -> None:
         for name, model in retail.MODELS[5:]:
-            cat.register(name, model(cat))
+            cat.register(name, persist_scoped(model(cat)))
 
     return run
 

@@ -135,13 +135,16 @@ fct_invoice_line_value AS (
 _PIPELINE_CTE = f"WITH {_RAW_CTE.strip()},\n{_DIMS_CTE.strip()}"
 
 
-_PIPELINE_CACHE: dict[int, object] = {}
+_PIPELINE_CACHE: dict[str, object] = {}
 
 
 def _built_catalog(spark: SparkSession):
-    """One pipeline run (incl. quality gates) per SparkSession — the eight
-    retail_* queries share the built catalog."""
-    key = id(spark)
+    """One pipeline run (incl. quality gates) per Spark application — the
+    eight retail_* queries share the built catalog. Keyed on the
+    application id, not ``id(spark)``: a session rebuilt after ``stop()``
+    can reuse a dead session's id, and must not get back a catalog bound
+    to the stopped context."""
+    key = spark.sparkContext.applicationId
     if key not in _PIPELINE_CACHE:
         _PIPELINE_CACHE[key] = run_retail_pipeline(spark)
     return _PIPELINE_CACHE[key]

@@ -1,10 +1,10 @@
 """Data-quality checks + fail-stop gate runner — the Soda surface
 (include/soda/check_function.py, include/soda/checks/**).
 
-Each check compiles to one small DataFrame aggregation on the just-built
-table; a stage gate evaluates its checks and raises ``QualityGateError``
-before downstream stages run (the reference's ``raise ValueError('Soda
-Scan failed')`` semantics, check_function.py:19-23).
+A stage gate evaluates its checks on the just-built tables and raises
+``QualityGateError`` before downstream stages run (the reference's
+``raise ValueError('Soda Scan failed')`` semantics,
+check_function.py:19-23).
 
 Check vocabulary (SURVEY.md §2.6 A7, §2.9 F10/F11):
 - ``schema_check``     required columns + types (schema contracts, e.g.
@@ -16,23 +16,31 @@ Check vocabulary (SURVEY.md §2.6 A7, §2.9 F10/F11):
 - ``failed_rows``      arbitrary predicate must match 0 rows
                        (fct_invoice_line_value.yml:13-18)
 
-Scale: every check is a single filtered aggregate — predicate-pushed,
-codegen, no collection beyond one scalar per check. Checks on the same
-table could share one pass via a combined agg; kept separate for
-reporting clarity (each failure names its check).
+One pass per table: every check compiles to an aggregate column, and all
+checks on one table (plus its ``count(*)``) run as ONE aggregate action —
+a table with a ``unique(key)`` check gets a two-level aggregate grouped
+by the key. Each check still yields its own ``CheckResult``, so a failure
+names its check.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
 class QualityGateError(RuntimeError):
-    """A quality gate failed; downstream stages must not run."""
+    """A quality gate failed; downstream stages must not run. ``reports``
+    holds the run records of the stages that ran, the failing one last."""
+
+    def __init__(self, message: str, reports: list["QualityReport"] | None = None):
+        super().__init__(message)
+        self.reports = reports or []
 
 
 @dataclass
@@ -45,7 +53,14 @@ class CheckResult:
 
 @dataclass
 class QualityReport:
+    """A gate's check results; as a pipeline run record it also carries
+    the stage name, the stage's wall seconds (run + gate) and the row
+    count of every table the gate aggregated."""
+
     results: list[CheckResult] = field(default_factory=list)
+    rows: dict[str, int] = field(default_factory=dict)
+    stage: str = ""
+    seconds: float = 0.0
 
     def add(self, r: CheckResult) -> None:
         self.results.append(r)
@@ -54,14 +69,126 @@ class QualityReport:
     def failures(self) -> list[CheckResult]:
         return [r for r in self.results if not r.passed]
 
-    def raise_on_failure(self) -> None:
+    def raise_on_failure(self, reports: list["QualityReport"] | None = None) -> None:
+        """Raise ``QualityGateError`` carrying ``reports`` (default: this
+        report alone) if any check failed."""
         if self.failures:
             lines = "; ".join(f"{r.table}.{r.check}: {r.detail}" for r in self.failures)
-            raise QualityGateError(f"quality gate failed: {lines}")
+            raise QualityGateError(f"quality gate failed: {lines}", reports or [self])
 
 
 # ---------------------------------------------------------------------------
-# Individual checks
+# Checks compiled to aggregates
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Check:
+    """One check as an aggregate: ``agg`` folds a table's rows (or one key
+    group's rows), ``merge`` folds the per-group values of a grouped pass,
+    ``verdict`` maps the final value to (passed, detail). ``unique(key)``
+    has no ``agg``: it is the grouping itself."""
+
+    name: str
+    agg: Column | None
+    merge: Callable[[str], Column] | None
+    verdict: Callable[[Any], tuple[bool, str]]
+    key: str | None = None
+
+
+def _counting(name: str, cond: Column, noun: str) -> _Check:
+    # count(when(cond)) counts exactly the rows filter(cond) keeps: a NULL
+    # predicate drops the row. A grouped pass sums per-group counts, and
+    # sum() over zero groups is NULL: read as 0.
+    return _Check(
+        name, F.count(F.when(cond, 1)), F.sum, lambda n: (not n, f"{n or 0} {noun}")
+    )
+
+
+def _not_null(col: str) -> _Check:
+    return _counting(f"not_null({col})", F.col(col).isNull(), "nulls")
+
+
+def _unique(col: str) -> _Check:
+    return _Check(
+        f"unique({col})", None, None, lambda n: (n == 0, f"{n} duplicated values"), key=col
+    )
+
+
+def _accepted_range(col: str, lo, hi) -> _Check:
+    return _counting(
+        f"accepted_range({col},[{lo},{hi}])",
+        ~F.col(col).between(lo, hi) | F.col(col).isNull(),
+        "out of range",
+    )
+
+
+def _min_threshold(col: str, bound) -> _Check:
+    return _Check(
+        f"min({col})>={bound}",
+        F.min(col),
+        F.min,
+        lambda v: (v is not None and v >= bound, f"min={v}"),
+    )
+
+
+def _failed_rows(predicate: str) -> _Check:
+    return _counting(f"failed_rows({predicate})", F.expr(predicate), "rows")
+
+
+def _evaluate(df: DataFrame, table: str, checks: list[_Check]) -> tuple[list[CheckResult], int]:
+    """Run ``checks`` on ``df`` as ONE aggregate action; return their
+    results in order plus the table's row count.
+
+    With a ``unique(key)`` check the aggregate has two levels: the inner
+    ``groupBy(key)`` computes ``count(*)`` and every row check's ``agg``
+    per key, the outer level merges those and counts groups with more
+    than one row. ``groupBy`` keeps NULL as one group, so a repeated NULL
+    key counts as one duplicated value."""
+    keys = {c.key for c in checks if c.key is not None}
+    if len(keys) > 1:
+        raise ValueError(f"{table}: one unique() key per pass, got {sorted(keys)}")
+    row_checks = [c for c in checks if c.key is None]
+    aggs = [F.count(F.lit(1))] + [c.agg for c in row_checks]
+    dup = None
+    if keys:
+        cols = [f"_c{i}" for i in range(len(aggs))]
+        per_key = df.groupBy(*keys).agg(*(a.alias(c) for a, c in zip(aggs, cols)))
+        out = per_key.agg(
+            F.sum(cols[0]),
+            *(c.merge(col) for c, col in zip(row_checks, cols[1:])),
+            F.count(F.when(F.col(cols[0]) > 1, 1)),
+        ).first()
+        dup = out[-1]
+    else:
+        out = df.agg(*aggs).first()
+    values = iter(out[1:])
+    results = []
+    for c in checks:
+        passed, detail = c.verdict(dup if c.key is not None else next(values))
+        results.append(CheckResult(table, c.name, passed, detail))
+    return results, out[0] or 0
+
+
+def _gate(cat, checks: list[tuple[str, _Check]]) -> QualityReport:
+    """Evaluate ``(table, check)`` pairs with one aggregate per table;
+    results keep the declaration order and ``rows`` gets each table's row
+    count."""
+    by_table: dict[str, list[_Check]] = {}
+    for table, c in checks:
+        by_table.setdefault(table, []).append(c)
+    rep = QualityReport()
+    done: dict[tuple[str, str], CheckResult] = {}
+    for table, cs in by_table.items():
+        results, rep.rows[table] = _evaluate(cat.table(table), table, cs)
+        done.update(((table, r.check), r) for r in results)
+    for table, c in checks:
+        rep.add(done[(table, c.name)])
+    return rep
+
+
+# ---------------------------------------------------------------------------
+# Individual checks (one aggregate action each)
 # ---------------------------------------------------------------------------
 
 
@@ -86,33 +213,25 @@ def schema_check(
 
 
 def not_null(df: DataFrame, col: str, *, table: str) -> CheckResult:
-    n = df.filter(F.col(col).isNull()).count()
-    return CheckResult(table, f"not_null({col})", n == 0, f"{n} nulls")
+    return _evaluate(df, table, [_not_null(col)])[0][0]
 
 
 def unique(df: DataFrame, col: str, *, table: str) -> CheckResult:
-    n = df.groupBy(col).count().filter(F.col("count") > 1).count()
-    return CheckResult(table, f"unique({col})", n == 0, f"{n} duplicated values")
+    return _evaluate(df, table, [_unique(col)])[0][0]
 
 
 def accepted_range(
     df: DataFrame, col: str, lo, hi, *, table: str
 ) -> CheckResult:
-    n = df.filter(~F.col(col).between(lo, hi) | F.col(col).isNull()).count()
-    return CheckResult(
-        table, f"accepted_range({col},[{lo},{hi}])", n == 0, f"{n} out of range"
-    )
+    return _evaluate(df, table, [_accepted_range(col, lo, hi)])[0][0]
 
 
 def min_threshold(df: DataFrame, col: str, bound, *, table: str) -> CheckResult:
-    v = df.agg(F.min(col)).first()[0]
-    ok = v is not None and v >= bound
-    return CheckResult(table, f"min({col})>={bound}", ok, f"min={v}")
+    return _evaluate(df, table, [_min_threshold(col, bound)])[0][0]
 
 
 def failed_rows(df: DataFrame, predicate: str, *, table: str) -> CheckResult:
-    n = df.filter(predicate).count()
-    return CheckResult(table, f"failed_rows({predicate})", n == 0, f"{n} rows")
+    return _evaluate(df, table, [_failed_rows(predicate)])[0][0]
 
 
 # ---------------------------------------------------------------------------
@@ -158,49 +277,43 @@ def check_sources(cat) -> QualityReport:
 
 def check_transform(cat) -> QualityReport:
     """check_transform (checks/transform/*.yml): key uniqueness +
-    non-nullness per dim, weekday range, price min, fact failed-rows.
+    non-nullness per dim, weekday range, price min, fact failed-rows —
+    one aggregate per table, five in all.
 
     Documented deviation: the reference asserts weekday ∈ [0, 6]
     (dim_datetime.yml:9-12) while its own data is BigQuery DAYOFWEEK
     1..7 — every Saturday fails in the reference. We keep the 1..7 data
     semantics and check the range that matches them (SURVEY.md §2.9 F5).
     """
-    rep = QualityReport()
-    for t in ("dim_customer", "dim_datetime", "dim_product", "dim_invoice"):
-        key = {
-            "dim_customer": "customer_key",
-            "dim_datetime": "date_key",
-            "dim_product": "product_key",
-            "dim_invoice": "invoice_key",
-        }[t]
-        df = cat.table(t)
-        rep.add(unique(df, key, table=t))
-        rep.add(not_null(df, key, table=t))
-    rep.add(accepted_range(cat.table("dim_datetime"), "weekday", 1, 7, table="dim_datetime"))
-    rep.add(min_threshold(cat.table("dim_product"), "price", 0, table="dim_product"))
-    rep.add(
-        failed_rows(
-            cat.table("fct_invoice_line_value"),
-            "total_price < 0",
-            table="fct_invoice_line_value",
-        )
-    )
-    return rep
+    checks: list[tuple[str, _Check]] = []
+    for t, key in (
+        ("dim_customer", "customer_key"),
+        ("dim_datetime", "date_key"),
+        ("dim_product", "product_key"),
+        ("dim_invoice", "invoice_key"),
+    ):
+        checks += [(t, _unique(key)), (t, _not_null(key))]
+    checks += [
+        ("dim_datetime", _accepted_range("weekday", 1, 7)),
+        ("dim_product", _min_threshold("price", 0)),
+        ("fct_invoice_line_value", _failed_rows("total_price < 0")),
+    ]
+    return _gate(cat, checks)
 
 
 def check_report(cat) -> QualityReport:
     """check_report (checks/report/*.yml): non-null aggregates + positive
-    activity minima."""
-    rep = QualityReport()
-    rc = cat.table("report_customer_invoices")
-    for c in ("country", "total_invoices", "total_revenue"):
-        rep.add(not_null(rc, c, table="report_customer_invoices"))
-    rep.add(min_threshold(rc, "total_invoices", 1, table="report_customer_invoices"))
-    rp = cat.table("report_product_invoices")
-    rep.add(min_threshold(rp, "total_quantity_sold", 1, table="report_product_invoices"))
-    ry = cat.table("report_year_invoices")
-    rep.add(min_threshold(ry, "num_invoices", 0, table="report_year_invoices"))
-    return rep
+    activity minima — one aggregate per report."""
+    rc = "report_customer_invoices"
+    return _gate(
+        cat,
+        [(rc, _not_null(c)) for c in ("country", "total_invoices", "total_revenue")]
+        + [
+            (rc, _min_threshold("total_invoices", 1)),
+            ("report_product_invoices", _min_threshold("total_quantity_sold", 1)),
+            ("report_year_invoices", _min_threshold("num_invoices", 0)),
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -132,21 +132,24 @@ def _parse_bytes(raw: str) -> int:
     return int(m.group(1)) * _UNITS[m.group(2)]
 
 
-_CATALOG_CACHE: dict[tuple[int, str], "Catalog"] = {}
+_CATALOG_CACHE: dict[tuple[str, str], "Catalog"] = {}
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> Catalog:
     """Load every driver test table from ``sf_dir`` into a Catalog.
 
-    Memoized per (session, dir): repeated queries share the analyzed scan
-    relations instead of re-listing files and re-reading footers. The
-    ``Catalog.table`` lookup uses its own dict, so two catalogs at
-    different scale factors coexist safely (temp views are a convenience
-    for spark.sql users and reflect the most recent load).
+    Memoized per (Spark application, dir): repeated queries share the
+    analyzed scan relations instead of re-listing files and re-reading
+    footers. The application id, unlike ``id(spark)``, is never reused by
+    a session rebuilt after ``stop()``, so a stale catalog bound to a
+    stopped context cannot come back. The ``Catalog.table`` lookup uses
+    its own dict, so two catalogs at different scale factors coexist
+    safely (temp views are a convenience for spark.sql users and reflect
+    the most recent load).
     """
     from data_pipeline_4_online_retail_spark.session import pin_session_semantics
 
-    key = (id(spark), sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
     if key in _CATALOG_CACHE:
         return _CATALOG_CACHE[key]
     pin_session_semantics(spark)
